@@ -68,7 +68,7 @@ from pyspark.sql import types as T
 
 from nicefox_graphdb_spark.catalog import EdgeTable, GraphCatalog
 from nicefox_graphdb_spark.commit_plane import LocalCommitPlane
-from nicefox_graphdb_spark.graph_store import MutableGraph
+from nicefox_graphdb_spark.graph_store import MutableGraph, null_key_probe
 
 
 def _q(s: str) -> str:
@@ -930,13 +930,7 @@ class DurableGraph(MutableGraph):
         self.ensure_label(label)
         key = node_key(label)
         cols = self._merged_cols(key, rows)
-        extra = []
-        if null_check_cols:
-            anynull = None
-            for k in null_check_cols:
-                c = F.col(k).isNull()
-                anynull = c if anynull is None else anynull | c
-            extra.append(F.max(anynull).alias("__has_null"))
+        extra = null_key_probe(null_check_cols)
         # coarse per-row width bound: id + bucket + per-column slack
         est = 4096 + n_rows_bound * (48 + 32 * len(cols))
         res = self.tables.append_counted(
@@ -1000,15 +994,6 @@ class DurableGraph(MutableGraph):
             p["label"], p["rows"], p["n"], p["null_cols"], p["err"], p["err_pos"]
         )
 
-    def _null_metrics(self, null_check_cols) -> list:
-        if not null_check_cols:
-            return []
-        anynull = None
-        for k in null_check_cols:
-            c = F.col(k).isNull()
-            anynull = c if anynull is None else anynull | c
-        return [F.max(anynull).alias("__has_null")]
-
     def update_node_props(
         self, label: str, updates: DataFrame, replace_all: bool = False
     ) -> None:
@@ -1056,7 +1041,7 @@ class DurableGraph(MutableGraph):
                     touched,
                     merged,
                     append_df=self._align(pending["rows"], cols),
-                    append_metrics=self._null_metrics(null_cols),
+                    append_metrics=null_key_probe(null_cols),
                     append_est=app_est,
                     validate=_validate,
                 )

@@ -41,6 +41,20 @@ class CypherRuntimeError(Exception):
         self.message = message
         super().__init__(message)
 
+
+def null_key_probe(cols) -> list:
+    """The MERGE null-key probe as an aggregate list: ``__has_null`` is
+    true when any row has a NULL in any of ``cols`` (empty for no cols).
+    Ride it on an ``observe`` next to the row count — zero extra jobs."""
+    if not cols:
+        return []
+    anynull = None
+    for k in cols:
+        c = F.col(k).isNull()
+        anynull = c if anynull is None else anynull | c
+    return [F.max(anynull).alias("__has_null")]
+
+
 _CHECKPOINT_EVERY = 8
 
 
@@ -189,13 +203,7 @@ class MutableGraph:
         (used by the durable override to size the write)."""
         from pyspark.sql import Observation
 
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        if null_check_cols:
-            anynull = None
-            for k in null_check_cols:
-                c = F.col(k).isNull()
-                anynull = c if anynull is None else anynull | c
-            aggs.append(F.max(anynull).alias("__has_null"))
+        aggs = [F.count(F.lit(1)).alias("__n"), *null_key_probe(null_check_cols)]
         obs = Observation()
         ck = rows.observe(obs, *aggs).localCheckpoint(eager=True)
         got = obs.get

@@ -308,14 +308,77 @@ def test_create_rel_null_endpoint_raises(wengine):
     assert wengine.query("MATCH ()-[r:S]->() RETURN count(r) AS c") == [{"c": 0}]
 
 
+def _stored_rows(eng, label=None, rel_type=None):
+    """Rows in the store's own tables — unlike MATCH, this also counts an
+    edge row whose `_src`/`_dst` is NULL."""
+    cat = eng.catalog
+    if label is not None:
+        return cat.node(label).df.count() if cat.has_label(label) else 0
+    return sum(et.df.count() for et in cat.edge_tables([rel_type]))
+
+
 def test_merge_rel_null_endpoint_skips(wengine):
     """Reference parity: MERGE through a null-bound endpoint silently skips
-    that row (src/executor.ts:7135-7138 'return'), unlike CREATE."""
+    that row (src/executor.ts:7135-7138 'return'), unlike CREATE — for
+    both-bound and one-unbound patterns alike."""
     wengine.query("CREATE (:NM {id: 1})")
     wengine.query(
         "MATCH (a:NM) OPTIONAL MATCH (a)-[:R]->(b) MERGE (b)-[:S]->(a)"
     )
     assert wengine.query("MATCH ()-[r:S]->() RETURN count(r) AS c") == [{"c": 0}]
+    assert _stored_rows(wengine, rel_type="S") == 0
+    wengine.query(
+        "MATCH (a:NM) OPTIONAL MATCH (a)-[:R]->(b) "
+        "MERGE (b)-[:NT]->(c:NC {k: 1})"
+    )
+    assert _stored_rows(wengine, rel_type="NT") == 0
+    assert _stored_rows(wengine, label="NC") == 0
+
+
+@pytest.mark.parametrize(
+    "pattern",
+    [
+        "(a:NK {k: toInteger('z')})-[:R]->(b:NB)",
+        "(a:NK)-[:R]->(b:NB)-[:S]->(c:NC {k: toInteger('z')})",
+    ],
+    ids=["one_hop", "two_hop"],
+)
+def test_merge_rel_runtime_null_key_under_rows_raises(wengine, pattern):
+    """An uncorrelated pattern under outer rows still gets the runtime
+    MERGE-null check, whatever its hop count — and creates nothing."""
+    from nicefox_graphdb_spark.graph_store import CypherRuntimeError
+
+    wengine.query("CREATE (:NX)")
+    with pytest.raises(CypherRuntimeError, match="null property value"):
+        wengine.query(f"MATCH (x:NX) MERGE {pattern}")
+    assert _stored_rows(wengine, rel_type="R") == 0
+    assert _stored_rows(wengine, label="NK") == 0
+
+
+@pytest.mark.parametrize(
+    "rel", ["[:R|S]", "[r]"], ids=["multi_type", "untyped"]
+)
+def test_merge_rel_requires_single_type(wengine, rel):
+    """Neo4j parity: MERGE needs exactly one relationship type — also for
+    a standalone pattern that already has a match."""
+    from nicefox_graphdb_spark.cypher.expressions import CypherCompileError
+
+    wengine.query("CREATE (:A)-[:R]->(:B)")
+    with pytest.raises(CypherCompileError, match="single relationship type"):
+        wengine.query(f"MERGE (a:A)-{rel}->(b:B) RETURN count(*) AS c")
+    assert wengine.query("MATCH ()-[r]->() RETURN count(r) AS c") == [{"c": 1}]
+
+
+def test_merge_rel_both_bound_correlated_props(wengine):
+    """Relationship key props may reference the bound endpoints."""
+    wengine.query("UNWIND [1, 2] AS i CREATE (:CA {k: i}), (:CB {k: i})")
+    q = (
+        "MATCH (a:CA), (b:CB) WHERE a.k = b.k "
+        "MERGE (a)-[r:W {w: a.k}]->(b) RETURN r.w AS w ORDER BY w"
+    )
+    assert wengine.query(q) == [{"w": 1}, {"w": 2}]
+    assert wengine.query(q) == [{"w": 1}, {"w": 2}]
+    assert _stored_rows(wengine, rel_type="W") == 2
 
 
 def test_set_replace_map_on_edge_persists(wengine):
@@ -422,6 +485,33 @@ def test_merge_job_budget_standalone_chain(spark, dengine):
     assert dengine.query(
         "MATCH (:City)-[:IN]->(:Country) RETURN count(*) AS c"
     ) == [{"c": 1}]
+
+
+@pytest.mark.parametrize(
+    "shape, q, n_create, n_match",
+    [
+        (
+            "both_bound",
+            "MATCH (a:A), (b:B) WHERE a.k = b.k MERGE (a)-[:R]->(b)",
+            9,
+            8,
+        ),
+        ("one_unbound", "MATCH (a:A) MERGE (a)-[:R]->(b:C {k: a.k})", 9, 9),
+        ("both_unbound", "MATCH (x:X) MERGE (a:D {k: x.k})-[:R]->(b:E)", 10, 10),
+    ],
+)
+def test_merge_job_budget_rel_shapes(spark, dengine, shape, q, n_create, n_match):
+    """Correlated relationship MERGE job budgets, one per binding shape —
+    every shape runs the one chain path. Bounds are the measured counts
+    (+2 slack, like the other durable pins)."""
+    dengine.query(
+        "UNWIND range(1, 3) AS i CREATE (:A {k: i}), (:B {k: i}), (:X {k: i})"
+    )
+    n = _jobs_during(spark, lambda: dengine.query(q), f"merge-{shape}-create")
+    assert n <= n_create, n
+    n = _jobs_during(spark, lambda: dengine.query(q), f"merge-{shape}-match")
+    assert n <= n_match, n
+    assert dengine.query("MATCH ()-[r:R]->() RETURN count(r) AS c") == [{"c": 3}]
 
 
 def test_merge_keyless_zero_input_creates_nothing(wengine):
