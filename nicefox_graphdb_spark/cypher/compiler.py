@@ -75,6 +75,10 @@ class CompileState:
 
 class CypherToSpark:
     _last_created_n: int | None = None
+    # a terminal MERGE's created rows, (label, append_nodes_counted kwargs),
+    # set only around its ON MATCH SET: the first node update on that label
+    # carries them as its ``append`` (the one-write upsert fusion)
+    _fused_append: tuple[str, dict] | None = None
 
     def __init__(
         self,
@@ -3707,7 +3711,12 @@ class CypherToSpark:
                 # store update
                 labels = info.labels or [""]
             for lbl in labels:
-                self.store.update_node_props(lbl, upd_rows, replace_all=replace_all)
+                append = None
+                if self._fused_append is not None and self._fused_append[0] == lbl:
+                    append, self._fused_append = self._fused_append[1], None
+                self.store.update_node_props(
+                    lbl, upd_rows, replace_all=replace_all, append=append
+                )
         else:
             self.store.update_edge_props(
                 df.select(info.id_col()).distinct(), upd_rows,
@@ -3916,21 +3925,11 @@ class CypherToSpark:
             # a limit-1 seed frame creates the chain 0 or 1 times, and the
             # durable-store writes no-op on empty frames — zero rows out
             # with the pattern variables still bound for downstream schema.
-            seed_df = (
-                state.require_df().limit(1).select(F.lit(1).alias("__seed"))
+            seed_df = self._probe_merge_keys(
+                state,
+                state.require_df().limit(1).select(F.lit(1).alias("__seed")),
+                elements,
             )
-            key_cols = []
-            for i, el in enumerate(elements):
-                for k, tc in self._compiled_props(state, el.props).items():
-                    key_cols.append(f"__sk{i}_{k}")
-                    seed_df = seed_df.withColumn(key_cols[-1], tc.col)
-            if key_cols:
-                # runtime MERGE-null check: a NULL key value never
-                # matches, so it always reaches this branch
-                seed_df, _ = self._checkpoint_created(
-                    seed_df, key_cols, "Cannot merge using null property value"
-                )
-                seed_df = seed_df.drop(*key_cols)
             seed = CompileState(df=seed_df, scope=Scope())
             st = self.compile_create(
                 seed, ast.Create(paths=[self._path_directed_for_create(m.path)])
@@ -3959,6 +3958,26 @@ class CypherToSpark:
                 new_state, ast.SetClause(items=m.on_match)
             )
         return new_state
+
+    def _probe_merge_keys(
+        self, state: CompileState, seed_df: DataFrame, elements: list
+    ) -> DataFrame:
+        """Runtime MERGE-null check for the create branch of an
+        uncorrelated pattern: a NULL key value never matches, so it always
+        reaches that branch. Evaluates every key property over ``seed_df``
+        (at most one row) in one checkpoint job and returns the frozen seed
+        without the key columns; no key properties → ``seed_df``, no job."""
+        key_cols = []
+        for i, el in enumerate(elements):
+            for k, tc in self._compiled_props(state, el.props).items():
+                key_cols.append(f"__sk{i}_{k}")
+                seed_df = seed_df.withColumn(key_cols[-1], tc.col)
+        if not key_cols:
+            return seed_df
+        seed_df, _ = self._checkpoint_created(
+            seed_df, key_cols, "Cannot merge using null property value"
+        )
+        return seed_df.drop(*key_cols)
 
     def _merge_chain_correlated(
         self, state: CompileState, m: ast.Merge
@@ -4346,7 +4365,7 @@ class CypherToSpark:
         key_types = {k: tc.dtype for k, tc in props.items()}
         created = None
         appended = False
-        staged = False
+        fused = None
         if key_tmp:
             keys = df.select(
                 *[F.col(tmp).alias(k) for k, tmp in key_tmp.items()]
@@ -4370,44 +4389,28 @@ class CypherToSpark:
                 # deleting the separate freezing checkpoint (one
                 # materialization instead of two; see
                 # MutableGraph.append_nodes_counted)
-                create_rows = folded if folded is not None else new_rows
-                if (
-                    on_match
-                    and getattr(self, "_terminal_write_clause", False)
-                    and hasattr(self.store, "stage_pending_append")
-                ):
-                    # upsert fusion (r12): a TERMINAL MERGE's created rows
-                    # ride the ON MATCH bucket rewrite as the append
-                    # branch of ONE durable write (the rewrite's touched
-                    # buckets overlap the fresh append, so the two-write
-                    # shape writes created rows twice). Terminal-gated:
-                    # the re-read binding below stays pre-append and a
-                    # later clause (or RETURN) would miss created nodes.
-                    # If the update never consumes the staging (e.g.
-                    # ON MATCH routed elsewhere), the store's defensive
-                    # flushes or the explicit flush below append normally.
-                    staged = self.store.stage_pending_append(
-                        label,
-                        create_rows,
-                        n_rows_bound=n_input,
-                        null_check_cols=tuple(key_names),
-                        err="Cannot merge node using null property value",
-                        err_pos=getattr(self, "_clause_pos", None),
-                    )
-                if not staged:
-                    n_created = self.store.append_nodes_counted(
-                        label,
-                        create_rows,
-                        n_rows_bound=n_input,
-                        null_check_cols=tuple(key_names),
-                        err="Cannot merge node using null property value",
-                        err_pos=getattr(self, "_clause_pos", None),
-                    )
-                    self._last_created_n = n_created
-                    created_empty = n_created == 0
-                else:
+                append = dict(
+                    rows=folded if folded is not None else new_rows,
+                    n_rows_bound=n_input,
+                    null_check_cols=tuple(key_names),
+                    err="Cannot merge node using null property value",
+                    err_pos=getattr(self, "_clause_pos", None),
+                )
+                if on_match and getattr(self, "_terminal_write_clause", False):
+                    # upsert fusion: a TERMINAL MERGE's created rows ride
+                    # the ON MATCH update as its explicit ``append`` — the
+                    # durable store writes both in ONE file instead of an
+                    # append whose rows the bucket rewrite re-writes.
+                    # Terminal-gated: the re-read binding below stays
+                    # pre-append and a later clause (or RETURN) would miss
+                    # created nodes.
+                    fused = append
                     self._last_created_n = None
                     created_empty = False  # unknown; unused on this path
+                else:
+                    n_created = self.store.append_nodes_counted(label, **append)
+                    self._last_created_n = n_created
+                    created_empty = n_created == 0
                 appended = True
             else:
                 created, created_empty = self._checkpoint_created(
@@ -4522,16 +4525,18 @@ class CypherToSpark:
                 self._gated(created_ids, self._last_created_n),
                 on_create,
             )
-        # matched_ids ≤ the distinct binding keys ≤ the observed input rows
-        new_state = self._apply_merge_sets(
-            new_state, var, self._gated(matched_ids, n_input), on_match
-        )
-        if staged:
-            # no-op when the ON MATCH update consumed the staged append;
-            # otherwise (nothing matched, or the SET routed to another
-            # table) the created rows append normally here. On an
-            # exception above, the engine's abort discards the staging.
-            self.store.flush_pending_append()
+        self._fused_append = (label, fused) if fused is not None else None
+        try:
+            # matched_ids ≤ the distinct binding keys ≤ the observed input rows
+            new_state = self._apply_merge_sets(
+                new_state, var, self._gated(matched_ids, n_input), on_match
+            )
+            if self._fused_append is not None:
+                # the ON MATCH items never updated `label` (a SET on
+                # another variable, or `SET d:Label`): plain append
+                self.store.append_nodes_counted(label, **fused)
+        finally:
+            self._fused_append = None
         return new_state
 
     def _fold_on_create(
@@ -4738,6 +4743,10 @@ class CypherToSpark:
             match_state.require_df(), [], "unreachable"
         )
         if match_empty:
+            self._probe_merge_keys(
+                state, self._ensure_df(state).require_df().limit(1),
+                m.path.elements,
+            )
             st = self.compile_create(
                 state, ast.Create(paths=[self._path_directed_for_create(m.path)])
             )

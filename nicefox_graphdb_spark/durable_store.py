@@ -480,10 +480,11 @@ class DurableTableStore:
     def append_counted(
         self, key: str, df: DataFrame, est_bytes: int,
         extra_metrics: list | None = None,
-    ) -> dict | None:
+    ) -> tuple[list[dict], dict] | None:
         """Append with the write job's own observation returned to the
-        caller (``rows`` plus any ``extra_metrics``) — lets a caller whose
-        frame carries fresh nondeterministic ids (uuid()) skip a separate
+        caller — ``(new file entries, observation row)``, the row carrying
+        ``rows`` plus any ``extra_metrics``. Lets a caller whose frame
+        carries fresh nondeterministic ids (uuid()) skip a separate
         freezing checkpoint: the single write IS the materialization.
         ``est_bytes`` must be a caller-measured bound routing the write
         down the small single-file path (the un-checkpointed plan's own
@@ -495,10 +496,9 @@ class DurableTableStore:
         leaves only orphaned (vacuum-able) files behind."""
         if est_bytes > self.small_write_bytes:
             return None
-        new, got = self._write_files(
+        return self._write_files(
             key, df, est_bytes=est_bytes, extra_metrics=extra_metrics
         )
-        return (new, got)
 
     def publish_append(self, key: str, entries: list[dict]) -> None:
         """Reference freshly written files in the manifest (the second half
@@ -576,23 +576,23 @@ class DurableTableStore:
         (they are small by construction — shared files only arise from
         small writes). Old files are left for vacuum (time-travel-ish).
 
-        ``append_df`` (r12) rides EXTRA rows — outside the
-        replaced-buckets contract — on the same single write: the new file
-        is the replacement state for ``touched`` AND an ordinary appended
-        file for every other bucket it lands in (the manifest's
+        ``append_df`` rides EXTRA rows — outside the replaced-buckets
+        contract — on the same single write: the new file is the
+        replacement state for ``touched`` AND an ordinary appended file for
+        every other bucket it lands in (the manifest's
         multi-file-per-bucket read model makes that consistent). This is
         the terminal-MERGE upsert fusion: created rows (fresh uuids, so
         their buckets are unknowable pre-write) ship with the ON MATCH
         rewrite in ONE write instead of append + rewrite.
-        ``append_metrics`` ride the append branch as an Observation and
-        come back in the returned row; ``validate`` (if given) is called
-        with that row BEFORE the manifest mutates — a raise aborts the
-        commit (written files stay orphaned, vacuum-able). The fused path
-        requires the single-file small write: when the size estimate
-        exceeds ``small_write_bytes`` (or is unknown) the method returns
-        ``False`` WITHOUT writing and the caller must fall back to a
-        separate append + replace. Returns the append-branch observation
-        row (or None without ``append_df``)."""
+        ``append_metrics`` ride the append branch as an Observation;
+        ``validate`` (if given) is called with that row BEFORE the manifest
+        mutates — a raise aborts the commit (written files stay orphaned,
+        vacuum-able). The fused path requires the single-file small write.
+
+        Returns the append-branch observation row, or ``{}`` without
+        ``append_df``. Returns None only when the fused write does not fit
+        (size estimate over ``small_write_bytes``, or unknown): nothing was
+        written and the caller falls back to a separate append + replace."""
         t = self.manifest["tables"][key]
         keep, drop, partial = [], [], []
         for e in t["files"]:
@@ -604,10 +604,11 @@ class DurableTableStore:
                 partial.append(e)
         touched = sorted(touched)
         caller_obs = None
-        if append_df is not None and not partial:
-            # the replace branch's rows-within-touched contract must be
-            # checked on the BRANCH (the appended rows are exempt), same
-            # observation pattern as the partial-file widening below
+        if append_df is not None or partial:
+            # the caller's rows-within-touched contract is checked on the
+            # caller's BRANCH — appended rows and a straddling file's
+            # remainder are exempt — by an observation pinned to it
+            # (computed during the write, no extra job)
             from pyspark.sql import Observation
 
             caller_obs = Observation()
@@ -624,22 +625,7 @@ class DurableTableStore:
             # rows into THIS write by widening the touched set to cover the
             # file — one write replaces everything, instead of a separate
             # remainder file per rewrite (they are small by construction —
-            # shared files only arise from small writes). The caller's
-            # rows-within-touched contract is still enforced against the
-            # ORIGINAL touched set, via an observation pinned to the
-            # caller's union branch (computed during the write, no extra
-            # job).
-            from pyspark.sql import Observation
-
-            caller_obs = Observation()
-            df = (
-                df.withColumn("__cb", self.bucket_col(F.col("_id")))
-                .observe(
-                    caller_obs,
-                    F.max(~F.col("__cb").isin(touched)).alias("stray"),
-                )
-                .drop("__cb")
-            )
+            # shared files only arise from small writes)
             ddir = os.path.join(self.root, "data", key)
             rem = (
                 self.spark.read.schema(self.schema_of(key))
@@ -670,7 +656,7 @@ class DurableTableStore:
                 # fused upsert needs the single-file small path (branch
                 # observations + one mixed-role file); too big or unknown
                 # — caller falls back to separate append + replace
-                return False
+                return None
             est += append_est
             from pyspark.sql import Observation
 
@@ -692,8 +678,8 @@ class DurableTableStore:
             touched=None if append_df is not None else touched,
             est_bytes=est,
         )
-        app_row = app_obs.get if app_obs is not None else None
-        if validate is not None and app_row is not None:
+        app_row = app_obs.get if app_obs is not None else {}
+        if validate is not None:
             validate(app_row)  # a raise aborts: manifest untouched
         if caller_obs is not None and caller_obs.get.get("stray"):
             # written files stay orphaned (vacuum-able); manifest untouched
@@ -742,7 +728,6 @@ class DurableGraph(MutableGraph):
         self._in_query = False
         self._query_dirty = False
         self._manifest_snapshot: dict | None = None
-        self._pending_append: dict | None = None
         m = self.tables.manifest
         for key, t in m["tables"].items():
             df = self.tables.read_table(key)
@@ -768,7 +753,6 @@ class DurableGraph(MutableGraph):
         self._query_dirty = False
 
     def commit_query(self) -> None:
-        self.flush_pending_append()  # safety net; the compiler flushes
         self._in_query = False
         self._manifest_snapshot = None
         if self._query_dirty:
@@ -777,7 +761,6 @@ class DurableGraph(MutableGraph):
         super().commit_query()
 
     def abort_query(self) -> None:
-        self._pending_append = None  # failed statement: discard staging
         self._in_query = False
         self._query_dirty = False
         if self._manifest_snapshot is not None:
@@ -881,7 +864,6 @@ class DurableGraph(MutableGraph):
         self._refresh_node(label)
 
     def append_nodes(self, label: str, rows: DataFrame) -> None:
-        self.flush_pending_append()
         self.ensure_label(label)
         key = node_key(label)
         cols = self._merged_cols(key, rows)
@@ -922,7 +904,6 @@ class DurableGraph(MutableGraph):
         keep the parallel checkpoint-then-append shape."""
         from nicefox_graphdb_spark.graph_store import CypherRuntimeError
 
-        self.flush_pending_append()
         if n_rows_bound is None or n_rows_bound > self.SMALL_APPEND_ROWS:
             return super().append_nodes_counted(
                 label, rows, n_rows_bound, null_check_cols, err, err_pos
@@ -952,128 +933,93 @@ class DurableGraph(MutableGraph):
             self._bump()
         return got["rows"]
 
-    def stage_pending_append(
+    def update_node_props(
         self,
         label: str,
-        rows: DataFrame,
-        n_rows_bound: int | None = None,
-        null_check_cols: tuple[str, ...] = (),
-        err: str = "Cannot merge node using null property value",
-        err_pos=None,
-    ) -> bool:
-        """Defer a small node append so the NEXT ``update_node_props`` on
-        the same label folds it into its single rewrite write — the
-        terminal-MERGE upsert fusion (r12): created rows + ON MATCH
-        updates land in ONE durable write instead of an append whose rows
-        the following bucket rewrite immediately re-writes. Row-gated like
-        ``append_nodes_counted``; returns False (caller appends normally)
-        when the bound is missing or too big. The caller OWNS the window:
-        it must call ``flush_pending_append`` once the fusing statement
-        finishes (a no-op if the update already consumed it); any other
-        mutator defensively flushes first."""
-        if n_rows_bound is None or n_rows_bound > self.SMALL_APPEND_ROWS:
-            return False
-        self._pending_append = {
-            "label": label,
-            "rows": rows,
-            "n": n_rows_bound,
-            "null_cols": null_check_cols,
-            "err": err,
-            "err_pos": err_pos,
-        }
-        return True
-
-    def flush_pending_append(self) -> int | None:
-        """Write a still-pending staged append through the normal fused
-        append path (no-op when an update already consumed it)."""
-        p = self._pending_append
-        if p is None:
-            return None
-        self._pending_append = None
-        return self.append_nodes_counted(
-            p["label"], p["rows"], p["n"], p["null_cols"], p["err"], p["err_pos"]
-        )
-
-    def update_node_props(
-        self, label: str, updates: DataFrame, replace_all: bool = False
+        updates: DataFrame,
+        replace_all: bool = False,
+        append: dict | None = None,
     ) -> None:
-        pending = self._pending_append
-        if pending is not None and pending["label"] != label:
-            self.flush_pending_append()  # different table: normal order
-            pending = None
+        """Keyed MERGE on the touched buckets only (see MutableGraph).
+
+        ``append`` holds the keyword arguments of ``append_nodes_counted``
+        (``rows``, ``n_rows_bound``, ``null_check_cols``, ``err``,
+        ``err_pos``): the terminal-MERGE upsert fusion. The created rows
+        ride this rewrite as the append branch of ONE durable write instead
+        of an append whose rows the rewrite immediately re-writes; their
+        null-key probe runs before the manifest changes. Nothing matched →
+        a plain append. A bound too big (or missing) for the single-file
+        write (or a label not yet stored) → append first, then rewrite."""
+        if append is not None and (
+            append["n_rows_bound"] is None
+            or append["n_rows_bound"] > self.SMALL_APPEND_ROWS
+            or not self.catalog.has_label(label)
+        ):
+            self.append_nodes_counted(label, **append)
+            append = None
         if not self.catalog.has_label(label):
-            self.flush_pending_append()
             return
         updates, touched, _n = self.tables.checkpoint_with_buckets(updates)
         if not touched:
-            # nothing matched: nothing to rewrite, pending (if any) is a
-            # plain append
-            self.flush_pending_append()
+            # nothing matched: nothing to rewrite, the created rows (if
+            # any) are a plain append
+            if append is not None:
+                self.append_nodes_counted(label, **append)
             self._bump()
             return
-        if touched:
-            self._adopt_node(label)
-            key = node_key(label)
-            cols = self._merged_cols(key, updates)
-            if pending is not None:
-                # stored/update types win; the created rows only add
-                # columns the table has never seen (e.g. ON CREATE props)
-                for f in pending["rows"].schema.fields:
-                    cols.setdefault(f.name, f.dataType)
-                cols = self._no_void(cols)
-            self.tables.set_schema(key, cols)
-            base_sub = self._align(self.tables.read_table(key, touched), cols)
-            merged = self._apply_node_updates(base_sub, updates, cols, replace_all)
-            if pending is not None:
-                from nicefox_graphdb_spark.graph_store import CypherRuntimeError
+        self._adopt_node(label)
+        key = node_key(label)
+        cols = self._merged_cols(key, updates)
+        if append is not None:
+            # stored/update types win; the created rows only add columns
+            # the table has never seen (e.g. ON CREATE props)
+            for f in append["rows"].schema.fields:
+                cols.setdefault(f.name, f.dataType)
+            cols = self._no_void(cols)
+        self.tables.set_schema(key, cols)
+        base_sub = self._align(self.tables.read_table(key, touched), cols)
+        merged = self._apply_node_updates(base_sub, updates, cols, replace_all)
+        fused = None
+        if append is not None:
+            from nicefox_graphdb_spark.graph_store import CypherRuntimeError
 
-                self._pending_append = None
-                err, err_pos = pending["err"], pending["err_pos"]
-                null_cols = pending["null_cols"]
+            null_cols = append["null_check_cols"]
 
-                def _validate(row: dict) -> None:
-                    if null_cols and row.get("__has_null"):
-                        raise CypherRuntimeError(err, pos=err_pos)
+            def _validate(row: dict) -> None:
+                if null_cols and row.get("__has_null"):
+                    raise CypherRuntimeError(append["err"], pos=append["err_pos"])
 
-                app_est = 4096 + pending["n"] * (48 + 32 * len(cols))
-                got = self.tables.replace_buckets(
-                    key,
-                    touched,
-                    merged,
-                    append_df=self._align(pending["rows"], cols),
-                    append_metrics=null_key_probe(null_cols),
-                    append_est=app_est,
-                    validate=_validate,
+            fused = self.tables.replace_buckets(
+                key,
+                touched,
+                merged,
+                append_df=self._align(append["rows"], cols),
+                append_metrics=null_key_probe(null_cols),
+                append_est=4096 + append["n_rows_bound"] * (48 + 32 * len(cols)),
+                validate=_validate,
+            )
+            if fused is None:
+                # too big for the single-file fused write: append, then
+                # REBUILD the rewrite frame over the post-append table —
+                # the pre-append `merged` would drop any created rows
+                # landing in the touched buckets
+                self.append_nodes_counted(label, **append)
+                base_sub = self._align(self.tables.read_table(key, touched), cols)
+                merged = self._apply_node_updates(
+                    base_sub, updates, cols, replace_all
                 )
-                if got is False:
-                    # too big for the single-file fused write: fall back
-                    # to the separate append + replace shape. The rewrite
-                    # frame must be REBUILT over the post-append table —
-                    # the pre-append `merged` snapshot would drop any
-                    # created rows landing in the touched buckets.
-                    self._pending_append = pending
-                    self.flush_pending_append()
-                    base_sub = self._align(
-                        self.tables.read_table(key, touched), cols
-                    )
-                    merged = self._apply_node_updates(
-                        base_sub, updates, cols, replace_all
-                    )
-                    self.tables.replace_buckets(key, touched, merged)
-            else:
-                self.tables.replace_buckets(key, touched, merged)
-            self._refresh_node(label)
+        if fused is None:
+            self.tables.replace_buckets(key, touched, merged)
+        self._refresh_node(label)
         self._bump()
 
     def add_label_to_nodes(
         self, from_label: str, ids: DataFrame, new_label: str
     ) -> None:
-        self.flush_pending_append()
         super().add_label_to_nodes(from_label, ids, new_label)
         self._bump()  # persist multi_label_dirty past the inner commit
 
     def remove_label_from_nodes(self, label: str, ids: DataFrame) -> None:
-        self.flush_pending_append()
         if not self.catalog.has_label(label):
             return
         idcol = ids.select(F.col(ids.columns[0]).alias("_id"))
@@ -1089,7 +1035,6 @@ class DurableGraph(MutableGraph):
         self._bump()
 
     def delete_nodes(self, ids: DataFrame, detach: bool = False) -> None:
-        self.flush_pending_append()
         # checkpoint FIRST: the dangling probe, per-label membership
         # probes, anti-joins, and detach scans all reuse the materialized
         # id set instead of re-running its source plan per action
@@ -1157,7 +1102,6 @@ class DurableGraph(MutableGraph):
     def append_edges(
         self, type_: str, src_label: str, dst_label: str, rows: DataFrame
     ) -> None:
-        self.flush_pending_append()
         slot = self._edge_slot(type_, src_label, dst_label)
         key = self._adopt_edge(slot)
         cols = self._merged_cols(key, rows)
@@ -1173,7 +1117,6 @@ class DurableGraph(MutableGraph):
     def update_edge_props(
         self, eids: DataFrame, updates: DataFrame, replace_all: bool = False
     ) -> None:
-        self.flush_pending_append()
         updates, touched, n_upd = self.tables.checkpoint_with_buckets(updates)
         if touched:
             for i in range(len(self.catalog._edges)):
@@ -1195,7 +1138,6 @@ class DurableGraph(MutableGraph):
         self._bump()
 
     def delete_edges(self, eids: DataFrame) -> None:
-        self.flush_pending_append()
         idcol, touched, n_ids = self.tables.checkpoint_with_buckets(
             eids.select(F.col(eids.columns[0]).alias("_id"))
         )

@@ -214,12 +214,22 @@ class MutableGraph:
         return got["__n"]
 
     def update_node_props(
-        self, label: str, updates: DataFrame, replace_all: bool = False
+        self,
+        label: str,
+        updates: DataFrame,
+        replace_all: bool = False,
+        append: dict | None = None,
     ) -> None:
         """updates: `_id` + new-value columns (property names). Matched rows
         get the new values; with replace_all, unmentioned props become NULL
         (Cypher `SET n = {...}` semantics, reference translator.ts:968-1001).
+
+        ``append`` (the keyword arguments of ``append_nodes_counted``)
+        carries a terminal MERGE's created rows: they append first, then the
+        update runs — DurableGraph folds both into one write instead.
         """
+        if append is not None:
+            self.append_nodes_counted(label, **append)
         if not self.catalog.has_label(label):
             return
         base = self.catalog.node(label).df

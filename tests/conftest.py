@@ -28,3 +28,20 @@ def tables(spark):
     from nicefox_graphdb_spark.sources import read_tables
 
     return read_tables(spark, SF_DIR)
+
+
+@pytest.fixture(scope="session")
+def jobs_during(spark):
+    """Count the Spark jobs scheduled while fn() runs (job-group scoped):
+    ``jobs_during(fn, tag) -> int``."""
+
+    def count(fn, tag: str) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(tag, tag)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    return count

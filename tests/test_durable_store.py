@@ -66,6 +66,63 @@ def test_merge_on_match_durable(spark, tmp_path):
     ) == [{"k": 1, "v": "matched"}, {"k": 2, "v": "created"}]
 
 
+def test_merge_upsert_fused_single_write(spark, tmp_path):
+    """A terminal MERGE with ON MATCH SET writes its created rows and the
+    matched rows' rewrite as ONE durable file; the created rows still land
+    when nothing matches or the ON MATCH SET targets another table, and a
+    NULL key raises before the manifest changes."""
+    from nicefox_graphdb_spark.graph_store import CypherRuntimeError
+
+    p = tmp_path / "g"
+    eng = _engine(spark, p)
+    store = eng.store.tables
+    ddir = p / "data" / "nodes" / "Doc"
+
+    def n_files():
+        return sum(f.endswith(".parquet") for f in os.listdir(ddir))
+
+    def docs():
+        return eng.query(
+            "MATCH (d:Doc) RETURN count(*) AS n, sum(d.m) AS m, sum(d.c) AS c"
+        )[0]
+
+    eng.query("UNWIND range(0, 999) AS i CREATE (:Doc {k: i})")
+    # (a) half the keys match, half are new: one file, one version
+    f0, v0 = n_files(), store.manifest["version"]
+    eng.query(
+        "UNWIND range(500, 1499) AS i MERGE (d:Doc {k: i}) "
+        "ON MATCH SET d.m = 1 ON CREATE SET d.c = 1"
+    )
+    assert n_files() == f0 + 1
+    assert store.manifest["version"] == v0 + 1
+    assert docs() == {"n": 1500, "m": 500, "c": 500}
+    # (b) every key new: nothing to rewrite, the rows still append
+    eng.query(
+        "UNWIND range(2000, 2099) AS i MERGE (d:Doc {k: i}) ON MATCH SET d.m = 1"
+    )
+    assert docs() == {"n": 1600, "m": 500, "c": 500}
+    # (c) ON MATCH updates only another label's node: each d created once
+    eng.query("UNWIND range(3000, 3004) AS i CREATE (:O {k: i})")
+    for _ in range(2):
+        eng.query("MATCH (o:O) MERGE (d:Doc {k: o.k}) ON MATCH SET o.seen = 1")
+    assert eng.query(
+        "MATCH (d:Doc) WHERE d.k >= 3000 RETURN count(*) AS n"
+    ) == [{"n": 5}]
+    assert eng.query("MATCH (o:O) RETURN sum(o.seen) AS s") == [{"s": 5}]
+    # (d) a NULL key in the fused upsert raises; nothing is published
+    v1 = store.manifest["version"]
+    with pytest.raises(CypherRuntimeError, match="null property value"):
+        eng.query(
+            "UNWIND [500, null] AS i MERGE (d:Doc {k: i}) "
+            "ON MATCH SET d.m = 2 ON CREATE SET d.c = 1"
+        )
+    assert store.manifest["version"] == v1
+    assert docs() == {"n": 1605, "m": 500, "c": 500}
+    assert _engine(spark, p).query(
+        "MATCH (d:Doc) RETURN count(*) AS n, sum(d.m) AS m"
+    ) == [{"n": 1605, "m": 500}]
+
+
 def test_update_rewrites_only_touched_buckets(spark, tmp_path):
     """The 100 TB property: on a compacted (bucket-exclusive) table, a
     keyed SET must leave every untouched file byte-identical in the

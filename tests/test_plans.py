@@ -170,24 +170,12 @@ def test_path_element_rehydration_single_join_per_comp(engine):
     assert plan.count("Arguments: posexplode(") == 1
 
 
-def _jobs_during(spark, fn, tag):
-    """Count Spark jobs scheduled while fn() runs (job-group scoped)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-
-def test_uncorrelated_exists_compiles_lazily(engine, spark):
+def test_uncorrelated_exists_compiles_lazily(engine, jobs_during):
     # round-9 (VERDICT r8 #6): compiling a query whose WHERE holds an
     # uncorrelated EXISTS pattern must schedule ZERO Spark jobs — the
     # emptiness probe folds into the plan as a broadcast 1-row boolean
     # and evaluates with the query itself.
-    n = _jobs_during(
-        spark,
+    n = jobs_during(
         lambda: engine.dataframe(
             "MATCH (r:Region) WHERE EXISTS((:Nation)) RETURN r.name AS rn"
         ),
@@ -214,7 +202,7 @@ def _mini_write_engine(spark):
     return eng
 
 
-def test_plain_delete_job_budget(spark):
+def test_plain_delete_job_budget(spark, jobs_during):
     # round-10 (VERDICT r9 #5) pinned 3 jobs; round-11 budgets 4: the
     # delete set is now checkpointed once (job 1, with the Observation
     # that row-gates the probe's broadcast riding it — ADVICE r10), so the
@@ -226,8 +214,7 @@ def test_plain_delete_job_budget(spark):
     # observe-fold alternative re-executes the delete-set MATCH plan and
     # was measured worse (see graph_store._validate_no_dangling).
     eng = _mini_write_engine(spark)
-    n = _jobs_during(
-        spark,
+    n = jobs_during(
         lambda: eng.query("MATCH (a:A {k: 3}) DELETE a"),
         "plain-delete-budget",
     )
@@ -328,7 +315,7 @@ def test_gated_keys_hint_is_row_gated(spark):
     assert hints(unhinted_big) == 0 and hints(unhinted_unknown) == 0
 
 
-def test_durable_statement_job_budgets(spark, tmp_path):
+def test_durable_statement_job_budgets(spark, tmp_path, jobs_during):
     # Durable MERGE/DELETE statements get the same job-budget pinning as
     # plain DELETE (VERDICT r10 #5): the checkpoint-with-buckets job
     # carries the probe gate count, membership probes broadcast the frozen
@@ -358,5 +345,5 @@ def test_durable_statement_job_budgets(spark, tmp_path):
             5),
     }
     for tag, (fn, budget) in budgets.items():
-        n = _jobs_during(spark, fn, tag)
+        n = jobs_during(fn, tag)
         assert n <= budget, f"{tag} scheduled {n} jobs (budget {budget})"

@@ -356,6 +356,25 @@ def test_merge_rel_runtime_null_key_under_rows_raises(wengine, pattern):
 
 
 @pytest.mark.parametrize(
+    "pattern",
+    [
+        "(a:NK {k: toInteger('z')})-[:R]->(b:NB)",
+        "(a:NK)-[:R]->(b:NB)-[:S]->(c:NC {k: toInteger('z')})",
+    ],
+    ids=["one_hop", "two_hop"],
+)
+def test_merge_rel_runtime_null_key_standalone_raises(wengine, pattern):
+    """A standalone pattern (no outer rows) gets the same runtime
+    MERGE-null check as one under rows — and creates nothing."""
+    from nicefox_graphdb_spark.graph_store import CypherRuntimeError
+
+    with pytest.raises(CypherRuntimeError, match="null property value"):
+        wengine.query(f"MERGE {pattern}")
+    assert _stored_rows(wengine, rel_type="R") == 0
+    assert _stored_rows(wengine, label="NK") == 0
+
+
+@pytest.mark.parametrize(
     "rel", ["[:R|S]", "[r]"], ids=["multi_type", "untyped"]
 )
 def test_merge_rel_requires_single_type(wengine, rel):
@@ -427,16 +446,6 @@ def test_reserved_structural_prop_names(wengine):
         wengine.query("CREATE (n:ZR {ok: 1}) SET n.`_src` = 2")
 
 
-def _jobs_during(spark, fn, tag):
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-
 @pytest.fixture()
 def dengine(spark, tmp_path):
     """Durable-store engine only — job-count guards pin the durable write
@@ -444,22 +453,20 @@ def dengine(spark, tmp_path):
     return CypherEngine(spark, GraphCatalog(spark), data_path=str(tmp_path / "g"))
 
 
-def test_merge_job_budget_keyless(spark, dengine):
+def test_merge_job_budget_keyless(dengine, jobs_during):
     """Round-9 (VERDICT r8 #2): uncorrelated/keyless MERGE must not issue
     isEmpty() driver-probe jobs — emptiness decisions ride the created-set
     checkpoint via observe. Bounds are the measured post-fix job counts;
     a reintroduced probe shows up as +1/+2 and trips the guard."""
     dengine.query("CREATE (:Person {name: 'A'}), (:Person {name: 'B'})")
-    n_create = _jobs_during(
-        spark,
+    n_create = jobs_during(
         lambda: dengine.query(
             "MATCH (p:Person) MERGE (s:Singleton) RETURN count(*) AS c"
         ),
         "merge-keyless-create",
     )
     assert n_create <= 9, n_create
-    n_match = _jobs_during(
-        spark,
+    n_match = jobs_during(
         lambda: dengine.query(
             "MATCH (p:Person) MERGE (s:Singleton) RETURN count(*) AS c"
         ),
@@ -469,15 +476,13 @@ def test_merge_job_budget_keyless(spark, dengine):
     assert dengine.query("MATCH (s:Singleton) RETURN count(*) AS c") == [{"c": 1}]
 
 
-def test_merge_job_budget_standalone_chain(spark, dengine):
-    n_create = _jobs_during(
-        spark,
+def test_merge_job_budget_standalone_chain(dengine, jobs_during):
+    n_create = jobs_during(
         lambda: dengine.query("MERGE (a:City {k: 1})-[:IN]->(b:Country {k: 2})"),
         "merge-chain-create",
     )
     assert n_create <= 12, n_create
-    n_match = _jobs_during(
-        spark,
+    n_match = jobs_during(
         lambda: dengine.query("MERGE (a:City {k: 1})-[:IN]->(b:Country {k: 2})"),
         "merge-chain-match",
     )
@@ -500,16 +505,18 @@ def test_merge_job_budget_standalone_chain(spark, dengine):
         ("both_unbound", "MATCH (x:X) MERGE (a:D {k: x.k})-[:R]->(b:E)", 10, 10),
     ],
 )
-def test_merge_job_budget_rel_shapes(spark, dengine, shape, q, n_create, n_match):
+def test_merge_job_budget_rel_shapes(
+    dengine, jobs_during, shape, q, n_create, n_match
+):
     """Correlated relationship MERGE job budgets, one per binding shape —
     every shape runs the one chain path. Bounds are the measured counts
     (+2 slack, like the other durable pins)."""
     dengine.query(
         "UNWIND range(1, 3) AS i CREATE (:A {k: i}), (:B {k: i}), (:X {k: i})"
     )
-    n = _jobs_during(spark, lambda: dengine.query(q), f"merge-{shape}-create")
+    n = jobs_during(lambda: dengine.query(q), f"merge-{shape}-create")
     assert n <= n_create, n
-    n = _jobs_during(spark, lambda: dengine.query(q), f"merge-{shape}-match")
+    n = jobs_during(lambda: dengine.query(q), f"merge-{shape}-match")
     assert n <= n_match, n
     assert dengine.query("MATCH ()-[r:R]->() RETURN count(r) AS c") == [{"c": 3}]
 
